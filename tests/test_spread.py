@@ -1,5 +1,6 @@
 """cpu_spread gate semantics (r15): spread a below-cores input, leave an
-at-or-above-cores input untouched, and never change results."""
+at-or-above-cores input (or one whose partition count cannot be read)
+untouched, and never change results."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -27,6 +28,21 @@ def test_leaves_wide_input_alone(spark):
     out = cpu_spread(df)
     # identity: no extra exchange inserted on an already-parallel input
     assert out is df
+
+
+def test_unreadable_partition_count_is_identity(spark):
+    class Unplannable:
+        sparkSession = spark
+
+        @property
+        def rdd(self):
+            raise RuntimeError("plan cannot be built")
+
+        def repartition(self, n):
+            raise AssertionError("a gate failure must not spread")
+
+    df = Unplannable()
+    assert cpu_spread(df) is df
 
 
 def test_result_neutral(spark):

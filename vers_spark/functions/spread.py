@@ -26,12 +26,17 @@ def cpu_spread(df: DataFrame) -> DataFrame:
     current RDD parallelism is below it; identity otherwise. Result-neutral
     for any deterministic DataFrame program (round-robin repartition is
     sort-guarded by ``spark.sql.execution.sortBeforeRepartition``, on by
-    default, so retried tasks reproduce the same placement)."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
+    default, so retried tasks reproduce the same placement).
+
+    The gate reads ``df.rdd``, which under AQE can finalize the input's
+    upstream shuffle stages eagerly; nothing caches them, so the real action
+    runs them again. The gate is free only on scans and other exchange-free
+    inputs. If the partition count cannot be read, the frame is returned
+    unchanged: a gate failure must never become a full shuffle of the input."""
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
         if df.rdd.getNumPartitions() >= target:
             return df
     except Exception:
-        pass
+        return df
     return df.repartition(target)

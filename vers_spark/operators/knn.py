@@ -60,7 +60,16 @@ def exact_knn(
     at sf0.1); the fold work lives on the corpus side's partitions, so
     that side must be the streamed one. Results are identical — the cross
     product is the same row set and the rank window's
-    (distance, neighbour_id) order is total per query."""
+    (distance, neighbour_id) order is total per query.
+
+    Bound: the query frame is broadcast whatever its size (the hint
+    overrides ``autoBroadcastJoinThreshold``), so callers keep it within
+    the bounded-batch contract of :mod:`vers_spark.functions.validate`
+    (at most ``MAX_QUERY_BATCH_ROWS`` rows, ≤ ~10⁵ × dim floats in
+    practice), as for :func:`exact_knn_blocked`. The bound is documented,
+    not checked: checking it would cost a driver job per call. A larger
+    batch fails in the broadcast (driver memory, ``maxResultSize``) rather
+    than falling back to a shuffled cartesian; split it into blocks."""
     if metric not in V.DISTANCE_FNS:
         raise ValueError(f"unknown metric {metric!r}; expected {sorted(V.DISTANCE_FNS)}")
     from vers_spark.functions.spread import cpu_spread

@@ -106,6 +106,22 @@ def _local_dirs() -> str:
     return os.environ.get("SPARK_LOCAL_DIRS", "/tmp")
 
 
+def _driver_memory() -> str:
+    """Default driver heap: half of the host's MemTotal, capped at 48g, so a
+    memory failure is a Spark OOM the driver reports, not a kernel OOM kill
+    (a fixed 48g on a 15 GB host lets the heap grow past physical RAM).
+    ``SPARK_GRAFT_DRIVER_MEM`` overrides it; 48g when /proc is unreadable."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open("/proc/meminfo") as fh:
+            total_kb = int(next(ln for ln in fh if ln.startswith("MemTotal:")).split()[1])
+    except (OSError, StopIteration, ValueError):
+        return "48g"
+    return f"{max(1024, min(48 * 1024, total_kb // 2048))}m"
+
+
 def get_spark(
     app_name: str = "vers_spark",
     cpus: int | str | None = None,
@@ -134,10 +150,13 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.driver.extraJavaOptions", _JIT_FLAGS)
         .config("spark.local.dir", _local_dirs())
         .config("spark.ui.enabled", "false")
+        # Python workers run from a daemon that stops each task re-reading
+        # pyspark.zip (see vers_spark.pyworker); static, read at JVM start
+        .config("spark.python.daemon.module", "vers_spark.pyworker")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         # testdata events.parquet stores TIMESTAMP(NANOS); read as long and
         # convert in the scan layer (sources.tables) — DuckDB truncates the
